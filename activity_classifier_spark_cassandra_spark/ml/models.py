@@ -17,8 +17,9 @@ Reference parity (file:line into /root/reference/src/main/java/com/actitracker/)
   (model/DecisionTrees.java:39-43) — computed as a conditional mean.
 - model sink/source (S5/S6): ``PipelineModel.save/load``
   (model/DecisionTrees.java:36, job/PredictActivity.java:31).
-- serving (ML7): load a persisted model, predict one feature vector,
-  return the class id (job/PredictActivity.java:28-40).
+- serving (ML7): load a persisted model, predict one feature vector
+  on the driver with the last stage's single-vector ``predict`` (no
+  Spark job), return the class id (job/PredictActivity.java:28-40).
 
 The training table is the flagship per-window feature frame from
 plans/pipeline.py (driver ``events`` table: one value axis, so 5
@@ -30,7 +31,9 @@ accuracy thresholds and seed-determinism are pinned by pytest.
 
 from __future__ import annotations
 
-from pyspark.ml import Pipeline, PipelineModel
+import math
+
+from pyspark.ml import Pipeline, PipelineModel, PredictionModel
 from pyspark.ml.classification import (
     DecisionTreeClassifier,
     GBTClassifier,
@@ -41,6 +44,7 @@ from pyspark.ml.classification import (
 )
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.linalg import DenseVector
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -242,13 +246,34 @@ def predict_point(
     feature_cols: list[str] | None = None,
 ) -> float:
     """ML7 point-lookup serving: one feature vector -> class id
-    (job/PredictActivity.java:28-40, hard-coded vector at :33)."""
-    feature_cols = feature_cols or EVENTS_FEATURE_COLS
-    row_df = spark.createDataFrame(
-        [tuple(float(v) for v in feature_values)], schema=feature_cols
+    (job/PredictActivity.java:28-40, hard-coded vector at :33).
+
+    Like the reference's ``model.predict(Vectors.dense(...))`` this runs
+    no Spark job: the values are placed by name in the fitted
+    assembler's input order and scored by the last stage's own
+    single-vector ``predict`` (one py4j call).  ``spark`` is unused; it
+    stays in the signature for positional callers.  A NaN or None value
+    raises ValueError, as the assembler's ``handleInvalid="error"`` does
+    under ``transform``."""
+    stages = model.stages
+    if not (
+        len(stages) == 2
+        and isinstance(stages[0], VectorAssembler)
+        and isinstance(stages[1], PredictionModel)
+    ):
+        names = " + ".join(type(s).__name__ for s in stages)
+        raise TypeError(
+            f"predict_point serves VectorAssembler + PredictionModel "
+            f"pipelines, not {names}"
+        )
+    assembler, clf = stages
+    by_name = dict(
+        zip(feature_cols or EVENTS_FEATURE_COLS, feature_values, strict=True)
     )
-    pred = model.transform(row_df).select("prediction").collect()[0]
-    return float(pred["prediction"])
+    values = [by_name[c] for c in assembler.getInputCols()]
+    if any(v is None or math.isnan(v) for v in values):
+        raise ValueError(f"null or NaN feature value in {values}")
+    return float(clf.predict(DenseVector([float(v) for v in values])))
 
 
 # A deterministic "hard-coded" serving vector in the spirit of

@@ -801,30 +801,32 @@ def beam_search(
         .agg(F.collect_list("neighbor_id").alias("nbrs"))
         .persist()
     )
-    adj.count()  # materialize -> accurate sizeInBytes for the planner
+    try:
+        adj.count()  # materialize -> accurate sizeInBytes for the planner
 
-    frontier = beam(frontier)
-    for i in range(HOPS):
-        cand = frontier.join(adj, "node", "left").select(
-            "query_id",
-            F.explode(
-                F.when(
-                    F.col("nbrs").isNull(), F.array(F.col("node"))
-                ).otherwise(
-                    F.concat(F.array(F.col("node")), F.col("nbrs"))
-                )
-            ).alias("node"),
-        )
-        frontier = beam(cand)
-        # checkpoint every third hop: keeps the nested-aggregate plan
-        # shallow without paying a materialization per hop (the
-        # frontier is |queries|*BEAM rows — the cost is all fixed
-        # per-job overhead)
-        if i % 3 == 2 or i == HOPS - 1:
-            frontier = frontier.localCheckpoint(eager=True)
-    # the final checkpoint above materialized every adjacency read;
-    # the returned plan only re-reads the corpus and the queries
-    adj.unpersist(False)
+        frontier = beam(frontier)
+        for i in range(HOPS):
+            cand = frontier.join(adj, "node", "left").select(
+                "query_id",
+                F.explode(
+                    F.when(
+                        F.col("nbrs").isNull(), F.array(F.col("node"))
+                    ).otherwise(
+                        F.concat(F.array(F.col("node")), F.col("nbrs"))
+                    )
+                ).alias("node"),
+            )
+            frontier = beam(cand)
+            # checkpoint every third hop: keeps the nested-aggregate plan
+            # shallow without paying a materialization per hop (the
+            # frontier is |queries|*BEAM rows — the cost is all fixed
+            # per-job overhead)
+            if i % 3 == 2 or i == HOPS - 1:
+                frontier = frontier.localCheckpoint(eager=True)
+    finally:
+        # the final checkpoint above materialized every adjacency read;
+        # the returned plan only re-reads the corpus and the queries
+        adj.unpersist(False)
 
     scored = (
         frontier.join(

@@ -1404,7 +1404,8 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     the decode_ok=False contract shared by every codec here.  That
     contract covers CORRUPT streams too: any parse error a malformed
     segment can produce (short SOF/SOS, unknown component id in a
-    scan, bit-reader overrun) is re-raised as NotImplementedError so
+    scan, bit-reader overrun, a corrupt Huffman table decoding a
+    coefficient past int64) is re-raised as NotImplementedError so
     one bad file drops one row instead of failing the Spark task."""
     data = bytes(data)
     cacheable = len(data) <= _CODEC_CACHE_MAX_BYTES
@@ -1416,7 +1417,7 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
         out = _decode_jpeg_checked(data)
     except NotImplementedError:
         raise
-    except (struct.error, IndexError, ValueError, KeyError) as e:
+    except (struct.error, IndexError, ValueError, KeyError, OverflowError) as e:
         raise NotImplementedError(f"corrupt JPEG stream: {e}") from e
     if cacheable and len(out[3]) <= _CODEC_CACHE_MAX_BYTES:
         _cache_put(_DEC_CACHE, data, out)

@@ -9,6 +9,8 @@ import struct
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from activity_classifier_spark_cassandra_spark.operators import multimodal as MM
 
@@ -271,3 +273,39 @@ def test_malformed_streams_raise_notimplemented_not_crash():
             MM.decode_jpeg(junk)
         except NotImplementedError:
             pass
+
+
+_FUZZ_BLOB = MM.encode_jpeg_baseline(_textured(7))
+
+
+def _decodes_or_declines(data: bytes) -> None:
+    """The codec contract: a decoded tuple or NotImplementedError."""
+    try:
+        out = MM.decode_jpeg(data)
+    except NotImplementedError:
+        return
+    assert isinstance(out, tuple) and len(out) == 4
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    flip=st.none() | st.integers(0, len(_FUZZ_BLOB) * 8 - 1),
+    cut=st.integers(0, len(_FUZZ_BLOB)),
+)
+def test_bit_flips_and_truncations_keep_error_contract(flip, cut):
+    blob = bytearray(_FUZZ_BLOB)
+    if flip is not None:
+        blob[flip // 8] ^= 1 << (flip % 8)
+    _decodes_or_declines(bytes(blob[:cut]))
+
+
+def test_corrupt_dht_overflow_declines():
+    """One flip in the DC table's code counts (byte 127 of the blob,
+    inside the first DHT) drives the Huffman slow path to a coefficient
+    too large for int64; that OverflowError used to escape the
+    contract and fail the whole Spark task."""
+    assert _FUZZ_BLOB[102:104] == b"\xff\xc4"
+    blob = bytearray(_FUZZ_BLOB)
+    blob[127] ^= 1 << 6
+    with pytest.raises(NotImplementedError, match="corrupt JPEG stream"):
+        MM.decode_jpeg(bytes(blob))

@@ -43,6 +43,21 @@ def separable(spark):
     return spark.createDataFrame(rows, schema=SCHEMA)
 
 
+@pytest.fixture(scope="module")
+def nonnegative(spark):
+    """3 classes for multinomial NB, which needs non-negative features
+    and separates on feature *proportions*: each class has its mass on
+    a different feature."""
+    rows = []
+    for label in (0.0, 1.0, 2.0):
+        for i in range(60):
+            jit = float(i % 7)
+            feats = [1.0 + jit] * 5
+            feats[int(label)] = 100.0 + jit
+            rows.append((label, *feats))
+    return spark.createDataFrame(rows, schema=SCHEMA)
+
+
 @pytest.mark.parametrize(
     "algo", ["decision_tree", "random_forest", "logistic_regression"]
 )
@@ -83,6 +98,51 @@ def test_predict_point_serving(spark, separable):
     assert predict_point(spark, model, [200.0] * 5) == 2.0
 
 
+@pytest.mark.parametrize(
+    "algo",
+    ["decision_tree", "random_forest", "logistic_regression", "naive_bayes"],
+)
+def test_predict_point_matches_transform(spark, separable, nonnegative, algo):
+    """ML7 driver-side serving agrees with ``transform`` on every
+    held-out vector, maps values by name, keeps the assembler's
+    handleInvalid="error" contract, and starts no Spark job."""
+    train, test = train_test_split(
+        nonnegative if algo == "naive_bayes" else separable
+    )
+    model = build_pipeline(algo).fit(train)
+    rows = (
+        model.transform(test)
+        .select("prediction", *EVENTS_FEATURE_COLS)
+        .collect()
+    )
+    vectors = [[r[c] for c in EVENTS_FEATURE_COLS] for r in rows]
+    want = [r["prediction"] for r in rows]
+
+    sc = spark.sparkContext
+    group = f"predict_point_{algo}"
+    sc.setJobGroup(group, "predict_point must not start a job")
+    try:
+        got = [predict_point(spark, model, v) for v in vectors]
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        spark.range(1).collect()  # the group does see a real job
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert got == want
+
+    reordered = EVENTS_FEATURE_COLS[::-1]
+    for v, p in zip(vectors, want):
+        assert predict_point(spark, model, v[::-1], reordered) == p
+
+    nan_vector = list(vectors[0])
+    nan_vector[2] = float("nan")
+    with pytest.raises(ValueError):
+        predict_point(spark, model, nan_vector)
+    with pytest.raises(ValueError):
+        predict_point(spark, model, [None] + vectors[0][1:])
+
+
 def test_q_ml_serve_end_to_end(spark):
     """The driver-registered serve query: train -> save -> load ->
     predict one row; label must be one of the 5 event-type classes."""
@@ -96,21 +156,15 @@ def test_gbt_onevsrest_learns(spark, separable):
     train, test = train_test_split(separable)
     model = build_pipeline("gbt").fit(train)
     assert error_rate(model.transform(test)) < 0.1
+    # OneVsRest is not a single-vector PredictionModel: no driver serving
+    with pytest.raises(TypeError, match="OneVsRestModel"):
+        predict_point(spark, model, [0.0] * 5)
 
 
-def test_naive_bayes_learns_nonnegative(spark):
+def test_naive_bayes_learns_nonnegative(spark, nonnegative):
     """ML5 (dead code in the reference): multinomial NB needs
-    non-negative features and separates on feature *proportions* —
-    give each class its mass on a different feature."""
-    rows = []
-    for label in (0.0, 1.0, 2.0):
-        for i in range(60):
-            jit = float(i % 7)
-            feats = [1.0 + jit] * 5
-            feats[int(label)] = 100.0 + jit
-            rows.append((label, *feats))
-    df = spark.createDataFrame(rows, schema=SCHEMA)
-    train, test = train_test_split(df)
+    non-negative features."""
+    train, test = train_test_split(nonnegative)
     model = build_pipeline("naive_bayes").fit(train)
     assert error_rate(model.transform(test)) < 0.2
 
