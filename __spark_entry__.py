@@ -202,7 +202,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_knn_binary": S.q_knn_binary,
         "q_orc_roundtrip": IO.q_orc_roundtrip,
         "q_stream_simhash_near_dup": SD.q_stream_simhash_near_dup,
-        "q_semdedup_blas": D.q_semdedup_blas,
+        "q_semdedup_blas": D.q_semdedup,  # same operator, kept name
         "q_span_dedup_multik": SP.q_span_dedup_multik,
         "q_coreset_kcenter": CS.q_coreset_kcenter,
         "q_jl_recall_eval": PJ.q_jl_recall_eval,

@@ -16,8 +16,8 @@ a TakeOrderedAndProject (per-partition top-1 + a 1-row driver merge)
 — the same bounded-driver-fetch-per-round pattern as the BPE merge
 loop.  Work is N·k d2 folds total; at production k the per-row fold
 becomes a per-Arrow-batch BLAS matmul exactly like
-``similarity.blas_assign`` (the q_semdedup_blas precedent applies
-verbatim: d2 is 6-dp rounded, selections are integer ids).
+``similarity.blas_assign``, the way q_semdedup assigns (its argument
+applies verbatim: d2 is 6-dp rounded, selections are integer ids).
 
 Determinism: the seed is the lowest vec_id; every argmax ranks by
 (ROUND(min_d2, 6) DESC, vec_id ASC); the final assignment ranks by

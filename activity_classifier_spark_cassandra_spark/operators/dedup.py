@@ -1155,14 +1155,14 @@ WHERE ROUND(n_shared / LEAST(s1.n_fp, s2.n_fp), 6) >= {WINNOW_MIN_CONTAIN}
 # member of every duplicate group (the dominance maximum).
 #
 # Composition: train_kmeans_centroids (similarity.py — deterministic
-# Lloyd's, bit-replayed by the oracle's chained CTEs) -> broadcast
-# centroid literal -> one projection computes (cluster, d2c) per row
-# -> cluster-local pair join.  Scale shape: the corpus is shuffled
-# ONCE on cluster id; pairing is n_c^2 per cluster, guarded by the
-# same MAX_CLUSTER_SIZE cap as q_dedup_embedding (over-cap clusters
-# pass through un-deduped; at production scale they would be
-# re-quantized finer).  tau=0.2 keeps the gate non-vacuous on the
-# synthetic embeddings (production uses ~0.95 on real encoders).
+# Lloyd's, replayed by the oracle's chained CTEs) -> one BLAS
+# assignment stage computes (cluster, d2c) per row -> cluster-local
+# verdicts.  Scale shape: the corpus is shuffled ONCE on cluster id;
+# pairing is n_c^2 per cluster, guarded by the same MAX_CLUSTER_SIZE
+# cap as q_dedup_embedding (over-cap clusters pass through un-deduped;
+# at production scale they would be re-quantized finer).  tau=0.2
+# keeps the gate non-vacuous on the synthetic embeddings (production
+# uses ~0.95 on real encoders).
 #
 # Round 8 (the round-7 verdict's "auto-k" item): trained k SCALES with
 # the corpus — k = max(K_TRAIN, ceil(n / TARGET_SEM_CLUSTER)) — so the
@@ -1173,9 +1173,9 @@ WHERE ROUND(n_shared / LEAST(s1.n_fp, s2.n_fp), 6) >= {WINNOW_MIN_CONTAIN}
 # was honest but the operator silently stopped deduping.  The oracle
 # computes k with the same formula (COUNT(*) over the corpus CTE), so
 # the replay stays exact at every SF.  n comes from one COUNT(*) —
-# bounded metadata, same class as the centroid collects.  At very
-# large k the centroid literal should become a broadcast DataFrame
-# (IVF-style); at probe scale (k~100, 64 dims) the literal is fine.
+# bounded metadata, same class as the centroid collects.  The
+# centroids ride in the assignment stage's closure (k x dim doubles:
+# 50 KB at probe scale, k~100 and 64 dims).
 
 SEMDEDUP_TAU = 0.2
 TARGET_SEM_CLUSTER = 2_000
@@ -1184,51 +1184,33 @@ TARGET_SEM_CLUSTER = 2_000
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector SemDeDup verdict: (vec_id, cluster, d2_centroid,
     kept) over trained k-means clusters — kept=false iff a tau-similar
-    same-cluster vector is farther from the centroid (tie: lower id)."""
-    from .similarity import (
-        _D2_FOLD,
-        _cents_literal,
-        train_kmeans_centroids,
-    )
+    same-cluster vector is farther from the centroid (tie: lower id).
 
+    Lloyd's assignment rounds and the final cluster assignment are
+    per-Arrow-batch BLAS matmuls (``similarity.blas_assign``); at the
+    100x probe with auto-k=100 an interpreted k-fold HOF spent 76-160
+    s in assignment.  The DuckDB oracle replays training with exact
+    folds: d2 is rounded to 6 dp on both sides, assignments are
+    integers, and centroid updates are decimal-exact aggregations
+    over them, so the trajectories agree except for a d2 within ~1
+    ulp of a 0.5e-6 rounding boundary (vanishing at driver-check
+    scale)."""
     import math
 
-    import pandas as pd
-
-    from .similarity import K_TRAIN
+    from .similarity import K_TRAIN, blas_assign, train_kmeans_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
     # auto-k (block comment): one bounded COUNT(*) sizes the codebook
     n = emb.count()
     k = max(K_TRAIN, math.ceil(n / TARGET_SEM_CLUSTER))
     cents = train_kmeans_centroids(emb, k=k)
-    lit = _cents_literal(cents)
-    d2 = _D2_FOLD.format(x="embedding", c="c.c")
-    # One transform evaluates every centroid's d2 fold once; array_min
-    # over (d2, k) structs gives both the assignment and the distance.
-    bk = F.expr(
-        f"array_min(transform({lit},"
-        f" c -> named_struct('best', {d2}, 'k', c.k)))"
-    )
-    assigned = _shared(
-        emb.select(
-            "vec_id",
-            "embedding",
-            bk.alias("_bk"),
-        ).select(
-            "vec_id",
-            "embedding",
-            F.col("_bk.k").alias("cluster"),
-            F.col("_bk.best").alias("d2_centroid"),
-        )
-    )
+    assigned = _shared(blas_assign(emb, cents, keep_embedding=True))
     return _semdedup_verdicts(assigned)
 
 
 def _semdedup_verdicts(assigned: DataFrame) -> DataFrame:
-    """Shared verdict stage over an assigned (vec_id, embedding,
-    cluster, d2_centroid) frame — used by both the exact-fold replay
-    query and the BLAS production variant."""
+    """Verdict stage over an assigned (vec_id, embedding, cluster,
+    d2_centroid) frame."""
     import pandas as pd
 
     small = (
@@ -1291,41 +1273,6 @@ def _semdedup_verdicts(assigned: DataFrame) -> DataFrame:
         .select("vec_id", "cluster", "d2_centroid", F.lit(True).alias("kept"))
     )
     return deduped.unionByName(passthrough)
-
-
-def q_semdedup_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production SemDeDup (round-9 verdict item 4): identical
-    semantics and output to ``q_semdedup``, with BOTH Lloyd's
-    assignment rounds and the final cluster assignment computed as
-    per-Arrow-batch BLAS matmuls (``similarity.blas_assign``) instead
-    of the interpreted k-fold HOF.  At the 100x probe with auto-k=100
-    the fold path spends 76-160 s in assignment; the matmul path is
-    one BLAS call per batch.
-
-    Oracle: the SAME exact-fold DuckDB replay as q_semdedup.  That is
-    sound, not a shortcut: d2 is rounded to 6 dp on both paths (the
-    fold literally contains ROUND(.., 6)), assignments are integers,
-    and centroid updates are decimal-exact aggregations over those
-    integers — so the BLAS trajectory reproduces the fold trajectory
-    bit-for-bit except for a d2 within ~1 ulp of a 0.5e-6 rounding
-    boundary (the q_approx_sketch-class tolerance gate, vanishing at
-    driver-check scale).  q_semdedup stays registered as the
-    exact-replay query; this entry is the one a 100-TB deployment
-    runs."""
-    import math
-
-    from .similarity import (
-        K_TRAIN,
-        blas_assign,
-        train_kmeans_centroids_blas,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    k = max(K_TRAIN, math.ceil(n / TARGET_SEM_CLUSTER))
-    cents = train_kmeans_centroids_blas(emb, k=k)
-    assigned = _shared(blas_assign(emb, cents, keep_embedding=True))
-    return _semdedup_verdicts(assigned)
 
 
 def _semdedup_sql() -> str:

@@ -581,13 +581,13 @@ def memo_route_cents(
 ) -> list[tuple[int, list[float]]]:
     """ROUTE_K trained routing centroids, trained once per session
     (deterministic Lloyd's — same list every time)."""
-    from .similarity import train_kmeans_centroids_blas
+    from .similarity import train_kmeans_centroids
 
     return _memo(
         spark,
         sf_dir,
         "route_cents",
-        lambda: train_kmeans_centroids_blas(
+        lambda: train_kmeans_centroids(
             load_table(spark, sf_dir, "embeddings"), k=ROUTE_K
         ),
     )
@@ -605,82 +605,6 @@ def save_knn_graph(graph: DataFrame, path: str) -> None:
 
 def load_knn_graph(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-# Hop-loop implementation switch.  "agg" (default): groupBy(query_id)
-# in-group top-k aggregate over a pre-aggregated adjacency — <=1
-# exchange per hop, linear plan (round-13 redesign).  "window": the
-# round-12 union -> distinct -> row_number shape, kept for the
-# output-parity pytest and same-session A/B probes.  Both produce
-# bit-identical results (pinned in test_graph_ann.py).
-BEAM_IMPL = "agg"
-
-
-def _beam_loop_window(
-    corpus: DataFrame,
-    graph: DataFrame,
-    queries: DataFrame,
-    frontier: DataFrame,
-    k: int,
-) -> DataFrame:
-    """Round-12 hop loop (reference implementation for parity tests):
-    per hop, union the frontier with its graph expansion, distinct,
-    score, keep top-BEAM per query via a row_number window — 2
-    exchanges per hop, frontier subtree duplicated by the union."""
-
-    def beam(fr: DataFrame) -> DataFrame:
-        scored = (
-            fr.join(
-                corpus.select(
-                    F.col("vec_id").alias("node"), F.col("e").alias("e2")
-                ),
-                "node",
-            )
-            .join(queries, "query_id")
-            .withColumn("cosine", F.round(F.expr(_COS), 6))
-            .filter(F.col("node") != F.col("query_id"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("node").asc()
-        )
-        return (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= BEAM)
-            .select("query_id", "node")
-        )
-
-    frontier = beam(frontier)
-    for i in range(HOPS):
-        hop = frontier.join(
-            graph.withColumnRenamed("vec_id", "node"), "node"
-        ).select("query_id", F.col("neighbor_id").alias("node"))
-        frontier = beam(frontier.unionByName(hop).distinct())
-        if i % 3 == 2 or i == HOPS - 1:
-            frontier = frontier.localCheckpoint(eager=True)
-
-    scored = (
-        frontier.join(
-            corpus.select(
-                F.col("vec_id").alias("node"), F.col("e").alias("e2")
-            ),
-            "node",
-        )
-        .join(queries, "query_id")
-        .withColumn("cosine", F.round(F.expr(_COS), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("node").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("node").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
-    )
 
 
 def beam_search(
@@ -739,23 +663,20 @@ def beam_search(
             F.broadcast(entries)
         )
 
-    if BEAM_IMPL == "window":
-        return _beam_loop_window(corpus, graph, queries, frontier, k)
-
     corpus_nodes = corpus.select(
         F.col("vec_id").alias("node"), F.col("e").alias("e2")
     )
 
     def beam(cand: DataFrame) -> DataFrame:
         """Top-BEAM (query_id, node) per query: ONE groupBy(query_id)
-        in-group top-k aggregate instead of distinct + row_number
-        window (2 exchanges -> <=1 per hop; ObjectHashAggregate's
-        partial mode dedups candidates map-side via collect_set, and
-        the hash(query_id) output partitioning satisfies the next
-        hop's aggregate so steady-state hops plan NO exchange at all).
-        Ordering parity with the old window (cosine DESC, node ASC) is
-        exact: sort_array descending on struct(cosine, -node) uses the
-        same null/NaN-safe double ordering as SortOrder, and duplicate
+        in-group top-k aggregate, <=1 exchange per hop
+        (ObjectHashAggregate's partial mode dedups candidates map-side
+        via collect_set, and the hash(query_id) output partitioning
+        satisfies the next hop's aggregate so steady-state hops plan
+        NO exchange at all).  The order is the oracle's per-hop
+        ROW_NUMBER order (cosine DESC, node ASC), exactly:
+        sort_array descending on struct(cosine, -node) uses the same
+        null/NaN-safe double ordering as SortOrder, and duplicate
         candidates collapse in collect_set because a duplicate
         (query_id, node) pair always carries the bit-identical rounded
         cosine."""
@@ -1767,7 +1688,7 @@ GRAPH_INSERT_POLICY_SQL = _graph_insert_policy_sql()
 # at growing N was bought with beam width and hop count (the search
 # walks from wherever the hash landed to wherever the query lives).
 # The scale fix is classic two-level ANN: train a coarse quantizer
-# once per index build (train_kmeans_centroids_blas — one BLAS
+# once per index build (train_kmeans_centroids — one BLAS
 # mapInPandas assignment per Lloyd round), route each query to its
 # ROUTE_NPROBE nearest cells, and seed the beam with the
 # ROUTE_ENTRIES members of those cells nearest THE QUERY (exact
@@ -1787,8 +1708,8 @@ GRAPH_INSERT_POLICY_SQL = _graph_insert_policy_sql()
 # standard IVF probe cost; ROUTE_K grows ~sqrt(N) at warehouse
 # scale, keeping cells bounded).  The corpus is never re-keyed.
 #
-# The DuckDB oracle replays Lloyd training (the fold path —
-# blas_assign is assignment-identical by the 6-dp rounding argument
+# The DuckDB oracle replays Lloyd training with exact folds
+# (blas_assign is assignment-identical by the 6-dp rounding argument
 # in similarity.py), the query routing, the member scoring, and the
 # beam search, all as MATERIALIZED CTEs — hash-checked like every
 # other query, not tolerance-gated.
@@ -2083,11 +2004,11 @@ def build_graph_index(emb: DataFrame) -> GraphIndex:
     centroids — everything the serving paths (hash-spread or routed
     beam search, insert/repair) need, built in one pass over the
     corpus."""
-    from .similarity import train_kmeans_centroids_blas
+    from .similarity import train_kmeans_centroids
 
     graph = build_knn_graph_q8(emb)
     q8 = _q8_corpus(emb.select("vec_id", F.col("embedding").alias("e")))
-    cents = train_kmeans_centroids_blas(emb, k=ROUTE_K)
+    cents = train_kmeans_centroids(emb, k=ROUTE_K)
     return GraphIndex(graph, q8, cents)
 
 

@@ -942,19 +942,21 @@ GROUP BY t.query_id
 # Lloyd's k-means expressed as DataFrame ops:
 #
 #   init      k seed centroids = the k lowest-vec_id vectors
-#   iterate   assign: one corpus scan, centroids broadcast as a
-#             LITERAL array-of-structs, argmin by squared L2 via a
-#             row-local fold (no corpus x k expansion, no shuffle);
+#   iterate   assign: one corpus scan, argmin by squared L2 as one
+#             matmul per Arrow batch (``blas_assign``; no corpus x k
+#             expansion, no shuffle);
 #             update: one combinable (cluster, dim) groupBy with
 #             DECIMAL(38,18) sums (merge-order-exact), mean rounded
 #             to 6 dp
-#   search    final assignment partitions the corpus into buckets;
-#             queries rank the trained centroids and probe the
-#             NPROBE nearest; exact cosine rescores candidates
+#   search    final assignment (centroids broadcast as a LITERAL
+#             array-of-structs, argmin via a row-local fold)
+#             partitions the corpus into buckets; queries rank the
+#             trained centroids and probe the NPROBE nearest; exact
+#             cosine rescores candidates
 #
 # Per iteration the k x dim centroid frame is collect()ed to the
-# driver and re-broadcast as literals — metadata-scale (k·dim doubles)
-# by construction, the same reduce-to-driver step every distributed
+# driver and shipped with the next assignment stage — metadata-scale
+# (k·dim doubles) by construction, the same reduce-to-driver step every distributed
 # k-means (including MLlib's) performs between iterations.
 #
 # Cross-engine exactness (why the DuckDB oracle can REPLAY training
@@ -962,11 +964,15 @@ GROUP BY t.query_id
 #   * centroids are rounded to 6 dp after init and after every mean
 #     update, so both engines carry identical doubles into the next
 #     iteration (decimal sums are exact; count and divide identical);
-#   * squared-L2 is a strict LEFT FOLD in element order in both
-#     engines (Spark: aggregate(zip_with(..)) from 0.0; DuckDB:
-#     list_reduce, whose seedless fold t1+t2+.. equals 0.0+t1+t2+..
-#     exactly in IEEE754) — the d2 doubles are bit-identical, so the
-#     rounded argmin and its cluster-asc tie-break agree everywhere;
+#   * the search-side squared-L2 is a strict LEFT FOLD in element
+#     order in both engines (Spark: aggregate(zip_with(..)) from 0.0;
+#     DuckDB: list_reduce, whose seedless fold t1+t2+.. equals
+#     0.0+t1+t2+.. exactly in IEEE754) — the d2 doubles are
+#     bit-identical, so the rounded argmin and its cluster-asc
+#     tie-break agree everywhere;
+#   * the training-side matmul d2 is rounded to the same 6 dp, so its
+#     integer assignments match the oracle's fold except for a d2
+#     within ~1 ulp of a 0.5e-6 boundary (``blas_assign``);
 #   * mirrors pyspark.ml.clustering.KMeans semantics (Lloyd's) with a
 #     deterministic seed; implemented directly so the oracle replays
 #     assignments instead of trusting an RNG.
@@ -1010,54 +1016,26 @@ def _assign_expr(cents_lit: str, vec_col: str = "embedding") -> str:
     )
 
 
-def train_kmeans_centroids(
-    emb: DataFrame, k: int = K_TRAIN, iters: int = KMEANS_ITERS
-) -> list[tuple[int, list[float]]]:
-    """Deterministic Lloyd's: returns [(cluster, centroid 6-dp)] after
-    ``iters`` assign/update rounds from the k lowest-vec_id seeds."""
-    seed_rows = (
-        emb.orderBy("vec_id")
-        .limit(k)
-        .select(
-            F.expr(
-                "transform(embedding, x -> round(CAST(x AS DOUBLE), 6))"
-            ).alias("centroid")
-        )
-        .collect()
-    )
-    cents = [(i, list(r.centroid)) for i, r in enumerate(seed_rows)]
-    for _ in range(iters):
-        assigned = emb.select(
-            F.expr(_assign_expr(_cents_literal(cents))).alias("cluster"),
-            "embedding",
-        )
-        new_rows = (
-            assigned.select(
-                "cluster", F.posexplode("embedding").alias("pos", "v")
-            )
-            .groupBy("cluster", "pos")
-            .agg(
-                F.round(
-                    F.sum(
-                        F.col("v").cast("double").cast("decimal(38,18)")
-                    ).cast("double")
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("m")
-            )
-            .groupBy("cluster")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias(
-                    "pm"
-                )
-            )
-            .select(
-                "cluster", F.expr("transform(pm, x -> x.m)").alias("centroid")
-            )
-            .collect()
-        )
-        cents = [(r.cluster, list(r.centroid)) for r in new_rows]
-    return cents
+def _d2_kernel(cents: list[tuple[int, list[float]]]):
+    """(ks, d2): the cluster ids in ascending order, and a function
+    mapping a pandas column of embeddings to its (n, k) float64 matrix
+    of squared L2 distances to those centroids — one matmul
+    (||x||^2 - 2xC^T + ||c||^2), rounded half-up to 6 dp like
+    ``_D2_FOLD``'s ROUND (d2 >= 0; banker's np.round would diverge).
+    Column j belongs to cluster ks[j]; callers break ties to the
+    lowest cluster id by position."""
+    import numpy as np
+
+    C = np.array([c for _, c in sorted(cents)], dtype=np.float64)
+    ks = np.array([k for k, _ in sorted(cents)], dtype=np.int32)
+    cn = (C * C).sum(axis=1)
+
+    def d2(col):
+        E = np.stack(col.to_numpy()).astype(np.float64)
+        out = (E * E).sum(axis=1)[:, None] - 2.0 * (E @ C.T) + cn[None, :]
+        return np.floor(out * 1e6 + 0.5) / 1e6
+
+    return ks, d2
 
 
 def blas_assign(
@@ -1067,38 +1045,27 @@ def blas_assign(
 ) -> DataFrame:
     """Nearest-centroid assignment as ONE Arrow mapInPandas stage:
     per batch, d2 to all k centroids is a single matmul
-    (||x||^2 - 2xC^T + ||c||^2), rounded half-away-from-zero to 6 dp
-    to match ``_D2_FOLD``'s rounding, argmin with ties to the lowest
-    cluster id (np.argmin first-occurrence over k-ordered columns =
-    the fold path's array_min struct rule).  Returns (vec_id
+    (``_d2_kernel``), argmin with ties to the lowest cluster id
+    (np.argmin first-occurrence over k-ordered columns = the
+    ``_assign_expr`` array_min struct rule).  Returns (vec_id
     [, embedding], cluster, d2_centroid).
 
-    This is the production path for large k: the interpreted
-    HOF fold evaluates k folds of dim terms per ROW (76-160 s at the
-    100x probe with auto-k=100); the matmul is one BLAS call per
-    Arrow batch.  Because d2 is rounded to 6 dp on BOTH paths and
-    assignments are integers, the two paths produce identical
-    assignments (and therefore identical downstream centroids /
-    verdicts) except for a d2 sitting within ~1 ulp of a 0.5e-6
-    rounding boundary — the same accepted tie-region class as the
-    pandas cosine UDF, vanishing at driver-check scale."""
+    This is the assignment step for large k: the interpreted HOF fold
+    of ``_assign_expr`` evaluates k folds of dim terms per ROW (76-160
+    s at the 100x probe with auto-k=100); the matmul is one BLAS call
+    per Arrow batch.  Because d2 is rounded to 6 dp on both sides and
+    assignments are integers, this stage and the oracle's sequential
+    fold agree on every assignment except for a d2 sitting within ~1
+    ulp of a 0.5e-6 rounding boundary — the same accepted tie-region
+    class as the pandas cosine UDF, vanishing at driver-check scale."""
     import numpy as np
     import pandas as pd
 
-    C = np.array([c for _, c in sorted(cents)], dtype=np.float64)
-    ks = np.array([k for k, _ in sorted(cents)], dtype=np.int32)
-    cn = (C * C).sum(axis=1)
+    ks, d2_of = _d2_kernel(cents)
 
     def batches(it):
         for pdf in it:
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            d2 = (
-                (E * E).sum(axis=1)[:, None]
-                - 2.0 * (E @ C.T)
-                + cn[None, :]
-            )
-            d2 = np.floor(d2 * 1e6 + 0.5) / 1e6  # half-up == fold's
-            # ROUND (d2 >= 0); banker's np.round would diverge
+            d2 = d2_of(pdf["embedding"])
             best = d2.argmin(axis=1)  # first occurrence = lowest k
             out = {"vec_id": pdf["vec_id"]}
             if keep_embedding:
@@ -1114,15 +1081,14 @@ def blas_assign(
     )
 
 
-def train_kmeans_centroids_blas(
+def train_kmeans_centroids(
     emb: DataFrame, k: int = K_TRAIN, iters: int = KMEANS_ITERS
 ) -> list[tuple[int, list[float]]]:
-    """Lloyd's with the BLAS assignment stage — the large-k production
-    trainer.  The trajectory is identical to ``train_kmeans_centroids``
-    (assignments are integers and the centroid update is the same
-    decimal-exact Spark aggregation over them), so the exact-fold
-    DuckDB replay oracles remain valid; only the per-round assignment
-    compute path differs."""
+    """Deterministic Lloyd's: returns [(cluster, centroid 6-dp)] after
+    ``iters`` assign/update rounds from the k lowest-vec_id seeds.
+    Each round assigns with ``blas_assign`` and updates with a
+    decimal-exact (cluster, dim) mean, so the DuckDB oracles replay
+    the trajectory with chained fold CTEs (see the block comment)."""
     seed_rows = (
         emb.orderBy("vec_id")
         .limit(k)

@@ -219,19 +219,6 @@ def read_cassandra(spark: SparkSession, keyspace: str, table: str) -> DataFrame:
     return spark.read.format(cfg["format"]).options(**cfg["options"]).load()
 
 
-def sorted_scan(
-    df: DataFrame, cols: list[str], ascending: bool = True
-) -> DataFrame:
-    """O1/O2: explicit ordered read (the reference pushes ORDER BY into
-    CQL clustering order via withAscOrder, RecognizeActivity.java:62,69).
-    A bare orderBy is a range-partitioned sample sort in Spark; prefer
-    window orderBy / min-max aggregates where the order is only a means
-    to an end (SURVEY.md §2.6)."""
-    return df.orderBy(*[
-        F.asc(c) if ascending else F.desc(c) for c in cols
-    ])
-
-
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:

@@ -309,3 +309,24 @@ def test_corrupt_dht_overflow_declines():
     blob[127] ^= 1 << 6
     with pytest.raises(NotImplementedError, match="corrupt JPEG stream"):
         MM.decode_jpeg(bytes(blob))
+
+
+def test_codec_cache_stats_are_per_cache():
+    """Encoder and decoder memo traffic land in separate counters:
+    one image encoded twice is one encode miss + one encode hit, one
+    blob decoded twice is one decode miss + one decode hit."""
+    MM._ENC_CACHE.clear()
+    MM._DEC_CACHE.clear()
+    before = MM.codec_cache_stats()
+    img = _textured(7)
+    blob = MM.encode_jpeg_baseline(img)
+    assert MM.encode_jpeg_baseline(img) == blob
+    MM.decode_jpeg(blob)
+    MM.decode_jpeg(blob)
+    after = MM.codec_cache_stats()
+    MM._ENC_CACHE.clear()
+    MM._DEC_CACHE.clear()
+    for side in ("enc", "dec"):
+        assert after[side]["hits"] - before[side]["hits"] == 1
+        assert after[side]["misses"] - before[side]["misses"] == 1
+        assert 0.0 < after[side]["hit_rate"] <= 1.0

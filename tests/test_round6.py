@@ -240,6 +240,12 @@ def test_ann_recall_eval_bounds(spark):
         "q_drift_psi",
         "q_dedup_recall_eval",
         "q_bpe_compression",
+        # beam_search's two caller shapes: hash-spread entries, and
+        # custom queries with k=G_K (the insert batch)
+        "q_knn_graph_search",
+        "q_knn_graph_insert",
+        "q_semdedup",
+        "q_bitext_mine_corpus",
     ],
 )
 def test_round6_matches_duckdb_oracle(spark, name):

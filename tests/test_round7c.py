@@ -286,24 +286,3 @@ def test_domain_mix_budget_python_replay(spark):
         assert r.n_tokens == avail[s]
         assert r.capped == capped[s], s
         assert abs(r.alloc_tokens - round(alloc[s], 6)) < 1e-6, s
-
-
-def test_semdedup_blas_matches_exact_fold(spark):
-    """Round-9 production variant: the BLAS assignment path must
-    reproduce the exact-fold query row-for-row (d2 is 6-dp rounded on
-    both paths, assignments are integers, centroid updates are
-    decimal-exact over them — see q_semdedup_blas docstring)."""
-    from activity_classifier_spark_cassandra_spark.operators.dedup import (
-        q_semdedup_blas,
-    )
-
-    cols = ["vec_id", "cluster", "d2_centroid", "kept"]
-    a = sorted(
-        (r.vec_id, r.cluster, r.d2_centroid, r.kept)
-        for r in q_semdedup(spark, SF_DIR).select(cols).collect()
-    )
-    b = sorted(
-        (r.vec_id, r.cluster, r.d2_centroid, r.kept)
-        for r in q_semdedup_blas(spark, SF_DIR).select(cols).collect()
-    )
-    assert a == b

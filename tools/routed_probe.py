@@ -36,7 +36,7 @@ from activity_classifier_spark_cassandra_spark.operators.graph_ann import (
     routed_entry_frontier,
 )
 from activity_classifier_spark_cassandra_spark.operators.similarity import (
-    train_kmeans_centroids_blas,
+    train_kmeans_centroids,
 )
 
 
@@ -89,7 +89,7 @@ def main() -> None:
 
     for route_k in (16, 64):
         t0 = time.time()
-        cents = train_kmeans_centroids_blas(emb, k=route_k)
+        cents = train_kmeans_centroids(emb, k=route_k)
         t_train = time.time() - t0
         for nprobe in (3, 6, 12):
             qs = emb.filter(emb.vec_id < GA.N_QUERIES).select(
@@ -113,7 +113,7 @@ def main() -> None:
             print(f"ROW {rows[-1]}", flush=True)
 
     if hops_sweep:
-        cents = train_kmeans_centroids_blas(emb, k=64)
+        cents = train_kmeans_centroids(emb, k=64)
         qs = emb.filter(emb.vec_id < GA.N_QUERIES).select(
             emb.vec_id.alias("query_id"), emb.embedding.alias("e1")
         )
